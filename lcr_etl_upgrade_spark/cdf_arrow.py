@@ -45,7 +45,7 @@ from lcr_etl_upgrade_spark.delta_lite import (
     _schema_identity,
     replay_log,
 )
-from lcr_etl_upgrade_spark.roaring_lite import iter_roaring_bitmap_array
+from lcr_etl_upgrade_spark.roaring_lite import parse_roaring_bitmap_array
 
 
 def _commit_files(path: str) -> dict[int, str]:
@@ -145,10 +145,7 @@ def replay_json_state(path: str, version: int) -> TableState:
 def _dv_positions_set(base: str, dv: dict | None) -> set[int]:
     if not dv:
         return set()
-    out: set[int] = set()
-    for container in iter_roaring_bitmap_array(_resolve_dv_blob(base, dv)):
-        out.update(int(x) for x in container)
-    return out
+    return parse_roaring_bitmap_array(_resolve_dv_blob(base, dv))
 
 
 def _typed_partition_value(value: str | None, dtype):

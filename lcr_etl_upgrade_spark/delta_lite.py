@@ -32,8 +32,9 @@ Deliberate limits (clear errors, not wrong answers):
   name resolution for modes ``name``/``id``) read natively, as does
   version 3 when every readerFeature is supported (``v2Checkpoint``,
   ``columnMapping``, ``timestampNtz``, ``deletionVectors`` — roaring
-  bitmaps integrity-checked driver-side via a streaming count, then
-  expanded EXECUTOR-side (mapInPandas over the descriptors) into a
+  bitmaps parsed and cardinality-checked driver-side into containers,
+  then expanded on executors with Spark built-ins (explode, sequence,
+  bit tests) into a
   ``_metadata.row_index`` anti-join, broadcast below MAX_DV_POSITIONS
   total cardinality and shuffled above it — any cardinality reads
   correctly; ``variantType`` and ``typeWidening``
@@ -65,15 +66,20 @@ import shutil
 import struct
 import urllib.parse
 import uuid
+from collections.abc import Iterator
 from dataclasses import dataclass, field
+from itertools import groupby
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from lcr_etl_upgrade_spark.roaring_lite import (
-    count_roaring_bitmap_array,
-    iter_roaring_bitmap_array,
+    container_lows,
+    container_payload,
+    frame_roaring_bitmap_array,
+    iter_roaring_containers,
     z85_decode,
     z85_encode,
 )
@@ -575,8 +581,8 @@ def replay_log(
 
 # ---- deletion vectors (deletionVectors reader feature) ------------------
 
-# Join-strategy valve, NOT a capability cap: DV positions decode
-# executor-side (one task per deletion vector), so any cardinality
+# Join-strategy valve, NOT a capability cap: DV positions expand on
+# executors from the driver-parsed containers, so any cardinality
 # reads correctly — but below this total the deleted-row relation is
 # hinted broadcast (the common case: DVs are tiny next to the table),
 # and above it the hint is dropped so the anti-join shuffles instead of
@@ -662,109 +668,127 @@ def _resolve_dv_blob(base: str, dv: dict) -> bytes:
     return data
 
 
-def _dv_verify(base: str, dvs: dict[str, dict]) -> dict[str, tuple[dict, int]]:
-    """Eager driver-side integrity pass over every file's deletion
-    vector: resolve the blob (format-version / size / CRC checks in
-    ``_resolve_dv_blob``) and verify the descriptor's cardinality with a
-    streaming O(one-container)-memory count — so corrupt tables fail at
-    ``read_delta_lite`` time, loudly, regardless of DV size. Positions
-    are NOT materialized here; expansion happens executor-side in
-    ``_apply_dv_filter``. Returns rel -> (descriptor, cardinality)."""
-    out: dict[str, tuple[dict, int]] = {}
-    for rel, dv in dvs.items():
-        n = count_roaring_bitmap_array(_resolve_dv_blob(base, dv))
-        card = dv.get("cardinality")
-        if card is not None and int(card) != n:
-            raise ValueError(
-                f"deletion vector for {rel!r}: descriptor cardinality "
-                f"{card} != {n} parsed positions"
-            )
-        out[rel] = (dv, n)
-    return out
+def _dv_containers(
+    rel: str, dv: dict, blob: bytes
+) -> list[tuple[int, int, bytes]]:
+    """``rel``'s deletion-vector blob -> its canonical ``(key,
+    cardinality, payload)`` containers (roaring_lite.container_payload:
+    run containers become array/bitset ones, so the list is never
+    larger than a run-free serialization), with the descriptor's
+    cardinality verified against the parsed content."""
+    containers = [
+        (key, len(lows), container_payload(lows))
+        for key, lows in iter_roaring_containers(blob)
+    ]
+    n = sum(card for _, card, _ in containers)
+    card = dv.get("cardinality")
+    if card is not None and int(card) != n:
+        raise ValueError(
+            f"deletion vector for {rel!r}: descriptor cardinality "
+            f"{card} != {n} parsed positions"
+        )
+    return containers
+
+
+def _dv_verify(
+    base: str, dvs: dict[str, dict]
+) -> dict[str, list[tuple[int, int, bytes]]]:
+    """Eager driver-side pass over every file's deletion vector: resolve
+    the blob (format-version / size / CRC checks in ``_resolve_dv_blob``)
+    and parse it into containers, verifying the descriptor's
+    cardinality — so corrupt tables fail at ``read_delta_lite`` time,
+    loudly. Driver memory is O(serialized DV bytes): positions are NOT
+    materialized here; ``_dv_positions`` expands the containers
+    executor-side. Returns rel -> containers."""
+    return {
+        rel: _dv_containers(rel, dv, _resolve_dv_blob(base, dv))
+        for rel, dv in dvs.items()
+    }
+
+
+# the scan-side spelling of _dv_file_key: Hadoop renders local paths as
+# file:/abs or file:///abs depending on the constructor, so normalize
+# the scheme away
+_FILE_KEY_SQL = "regexp_replace(_metadata.file_path, '^file:/+', '/')"
+
+
+def _dv_file_key(base: str, rel: str) -> str:
+    """The join key a data file's rows carry: its absolute path encoded
+    exactly as Hadoop renders ``_metadata.file_path`` (scheme stripped).
+    abspath, NOT realpath: Spark qualifies the path it was given without
+    resolving symlinks, so resolving here would desync the key for
+    tables reached through a symlink. A failed match would FAIL OPEN
+    (deleted rows silently resurrected), so the encoding equivalence is
+    pinned by tests over hostile partition-dir names."""
+    return _hadoop_path_encode(os.path.abspath(os.path.join(base, rel)))
 
 
 def _dv_positions(
     spark: SparkSession,
     base: str,
-    verified: dict[str, tuple[dict, int]],
+    verified: dict[str, list[tuple[int, int, bytes]]],
     files_in_scan: list[str],
 ):
     """The (encoded file URI, row index) relation of all marked rows in
-    ``files_in_scan``'s deletion vectors, expanded EXECUTOR-side (see
-    _apply_dv_filter for the full story), with the broadcast-vs-shuffle
-    hint already applied. None when no in-scan vector marks any row."""
+    ``files_in_scan``'s deletion vectors, with the broadcast-vs-shuffle
+    hint already applied. None when no in-scan vector marks any row.
+
+    The verified containers travel to Spark as ONE Arrow table, one row
+    per container: ``__off`` holds an array container's lows, or a
+    bitset container's nonzero 64-bit word offsets with the words in
+    ``__w``. Executors expand them with built-ins only (posexplode, then
+    ``sequence`` over the bits of each word and a bit test; an array
+    value is a one-bit word), so no Python worker starts and the driver
+    never holds more than the serialized containers."""
+    import pyarrow as pa
+
     in_scan = set(files_in_scan)
-    relevant = {
-        rel: dv
-        for rel, (dv, n) in verified.items()
-        if rel in in_scan and n > 0
-    }
-    if not relevant:
-        return None
-    # abspath, NOT realpath: Spark qualifies the path it was given
-    # without resolving symlinks, so resolving here would desync the
-    # join key for tables reached through a symlink. The path is then
-    # encoded exactly as Hadoop renders _metadata.file_path (verified
-    # empirically on this Spark: Java-URI path rules — space/%/# etc
-    # percent-encoded uppercase, sub-delims and non-ASCII kept raw).
-    # A failed match here would FAIL OPEN (deleted rows silently
-    # resurrected), so the encoding equivalence is pinned by tests
-    # over hostile partition-dir names. Keys are still computed on the
-    # DRIVER (the executor task only expands positions) so those pins
-    # cover this path unchanged.
-    desc_rows = [
-        (
-            _hadoop_path_encode(os.path.abspath(os.path.join(base, rel))),
-            json.dumps(dv),
-            int(verified[rel][1]),
-        )
-        for rel, dv in sorted(relevant.items())
+    rows = [
+        (_dv_file_key(base, rel), key, card, payload)
+        for rel, containers in sorted(verified.items())
+        if rel in in_scan
+        for key, card, payload in containers
     ]
-    total = sum(n for _, _, n in desc_rows)
-    desc = spark.createDataFrame(
-        desc_rows, "__dv_file string, __dv_json string, __dv_card long"
+    if not rows:
+        return None
+    offs: list[np.ndarray] = []
+    words: list[np.ndarray | None] = []
+    for _, _, card, payload in rows:
+        if card <= 4096:
+            offs.append(np.frombuffer(payload, dtype="<u2").astype(np.int32))
+            words.append(None)
+        else:
+            w = np.frombuffer(payload, dtype="<i8")
+            nz = np.flatnonzero(w)
+            offs.append((nz * 64).astype(np.int32))
+            words.append(w[nz])
+    table = pa.table(
+        {
+            "__dv_file": pa.array([r[0] for r in rows], pa.string()),
+            "__base": pa.array([r[1] << 16 for r in rows], pa.int64()),
+            "__off": pa.array(offs, pa.list_(pa.int32())),
+            "__w": pa.array(words, pa.list_(pa.int64())),
+        }
     )
-
-    def _expand(batches):
-        import numpy as np
-        import pandas as pd
-
-        CHUNK = 1_000_000
-        for pdf in batches:
-            for key, dv_json, card in zip(
-                pdf["__dv_file"], pdf["__dv_json"], pdf["__dv_card"]
-            ):
-                # STREAMED expansion: per-container batches (<=65,536
-                # values each) re-chunked into bounded Arrow frames, so
-                # even a single multi-hundred-million-row DV never
-                # materializes whole in this worker. The cardinality was
-                # driver-verified against these bytes; the bound
-                # re-guards the (pathological) case of the blob changing
-                # between plan and execution.
-                buf: list[int] = []
-                for container in iter_roaring_bitmap_array(
-                    _resolve_dv_blob(base, json.loads(dv_json)),
-                    max_values=int(card),
-                ):
-                    buf.extend(container)
-                    if len(buf) >= CHUNK:
-                        yield pd.DataFrame(
-                            {
-                                "__dv_file": key,
-                                "__dv_idx": np.asarray(buf, dtype=np.int64),
-                            }
-                        )
-                        buf = []
-                if buf:
-                    yield pd.DataFrame(
-                        {
-                            "__dv_file": key,
-                            "__dv_idx": np.asarray(buf, dtype=np.int64),
-                        }
-                    )
-
-    deleted = desc.repartition(len(desc_rows)).mapInPandas(
-        _expand, "__dv_file string, __dv_idx long"
+    total = sum(r[2] for r in rows)
+    deleted = (
+        spark.createDataFrame(table)
+        .selectExpr(
+            "__dv_file", "__base", "__w", "posexplode(__off) AS (__i, __off)"
+        )
+        .selectExpr(
+            "__dv_file",
+            "__base + __off AS __s",
+            "coalesce(__w[__i], 1L) AS __w",
+        )
+        .selectExpr(
+            "__dv_file",
+            "__s",
+            "__w",
+            "explode(sequence(0, IF(__w = 1, 0, 63))) AS __b",
+        )
+        .where("shiftright(__w, __b) & 1 = 1")
+        .selectExpr("__dv_file", "__s + __b AS __dv_idx")
     )
     if total <= MAX_DV_POSITIONS:
         deleted = F.broadcast(deleted)
@@ -777,41 +801,34 @@ def _apply_dv_filter(
     spark: SparkSession,
     df: DataFrame,
     base: str,
-    verified: dict[str, tuple[dict, int]],
+    verified: dict[str, list[tuple[int, int, bytes]]],
     files_in_scan: list[str],
     how: str = "left_anti",
 ) -> DataFrame:
     """Drop deleted rows: anti-join (file URI, row index) pairs against
     ``_metadata`` columns. (``how="left_semi"`` inverts the filter —
     KEEP only the rows the vectors mark — which is how the change-feed
-    reader materializes the rows a DV update deleted.) The deleted-row relation is built EXECUTOR-
-    side — a tiny descriptor DataFrame (one row per deletion vector,
-    already integrity-verified by ``_dv_verify``) expands to positions
-    inside ``mapInPandas``, one task per DV, so positions of arbitrary
-    cardinality never materialize on the driver. Requires the table
-    root to be reachable from executors — the same shared-storage
-    assumption the whole reader already makes for the parquet files.
+    reader materializes the rows a DV update deleted.) The deleted-row
+    relation is expanded EXECUTOR-side from the driver-verified
+    containers (``_dv_positions``), so positions of arbitrary
+    cardinality never materialize on the driver.
 
     Below MAX_DV_POSITIONS total cardinality the relation is hinted
     broadcast (no shuffle of the fact side — the common case); above
     it, an explicit shuffle_hash hint forces a shuffled hash join.
-    The hint must be explicit: Catalyst's size estimate for the
-    mapInPandas output derives from the tiny one-row-per-DV descriptor
-    relation, so merely DROPPING the broadcast hint would still
-    statically plan a broadcast join of the expanded positions — the
-    exact oversized build table the valve exists to prevent."""
+    The hint must be explicit: Catalyst sizes the expanded relation
+    from the small one-row-per-container table, so merely DROPPING the
+    broadcast hint would still statically plan a broadcast join of the
+    expanded positions — the exact oversized build table the valve
+    exists to prevent."""
     deleted = _dv_positions(spark, base, verified, files_in_scan)
     if deleted is None:
         # no marked rows: anti keeps everything, semi keeps nothing
         return df if how == "left_anti" else df.filter(F.lit(False))
-    scan = df.select(
+    scan = df.selectExpr(
         "*",
-        # Hadoop renders local paths as file:/abs or file:///abs
-        # depending on the constructor — normalize the scheme away
-        F.regexp_replace(
-            F.col("_metadata.file_path"), r"^file:/+", "/"
-        ).alias("__dv_scan_file"),
-        F.col("_metadata.row_index").alias("__dv_scan_idx"),
+        f"{_FILE_KEY_SQL} AS __dv_scan_file",
+        "_metadata.row_index AS __dv_scan_idx",
     )
     joined = scan.join(
         deleted,
@@ -868,7 +885,108 @@ def _physicalize(dt: T.DataType) -> T.DataType:
 def _quoted(name: str) -> Column:
     """Column reference by LITERAL name: physical names may contain dots
     (legal in Delta), which bare F.col would parse as nested access."""
-    return F.col("`" + name.replace("`", "``") + "`")
+    return F.col(_sql_name(name))
+
+
+def _sql_name(name: str) -> str:
+    """A column name as a SQL identifier: backtick-quoted, so dots,
+    spaces and backticks stay literal (the ``_quoted`` rule, as text)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_exact(dt: T.DataType) -> bool:
+    """Whether ``DataType.sql`` spells all of ``dt``: it writes NOT NULL
+    on struct fields but has no syntax for a non-nullable array element
+    or map value."""
+    if isinstance(dt, T.StructType):
+        return all(_sql_exact(f.dataType) for f in dt.fields)
+    if isinstance(dt, T.ArrayType):
+        return dt.containsNull and _sql_exact(dt.elementType)
+    if isinstance(dt, T.MapType):
+        return (
+            dt.valueContainsNull
+            and _sql_exact(dt.keyType)
+            and _sql_exact(dt.valueType)
+        )
+    return True
+
+
+# DataType JSON -> DataType.sql: a pure function of the type, so one
+# process-wide map, bounded by the distinct column types a process sees
+_TYPE_SQL: dict[str, str] = {}
+
+
+def _cast_select(
+    df: DataFrame, cols: list[tuple[str, T.DataType, str]], *extra: str
+) -> DataFrame:
+    """``CAST(src AS type) AS dst`` for each (source SQL expression, type,
+    target name) triple, then the ``extra`` SQL expressions, as ONE
+    ``selectExpr``: a Column per cast costs ~16 py4j round trips, a
+    string ~1 (the 101-column ``lead`` schema: 1,605 vs 106 calls per
+    projection). The type text is the JVM's own ``DataType.sql``, which
+    backtick-quotes nested field names, fetched once per distinct type.
+    A type that text cannot spell (``_sql_exact``) keeps a Column cast,
+    so no nullability changes."""
+    jvm = df.sparkSession._jvm
+    exprs: list = []
+    for src, dt, dst in cols:
+        if not _sql_exact(dt):
+            exprs.append(F.expr(src).cast(dt).alias(dst))
+            continue
+        key = dt.json()
+        if key not in _TYPE_SQL:
+            _TYPE_SQL[key] = jvm.org.apache.spark.sql.types.DataType.fromJson(
+                key
+            ).sql()
+        exprs.append(f"CAST({src} AS {_TYPE_SQL[key]}) AS {_sql_name(dst)}")
+    exprs += extra
+    if all(isinstance(e, str) for e in exprs):
+        return df.selectExpr(*exprs)
+    return df.select(*[F.expr(e) if isinstance(e, str) else e for e in exprs])
+
+
+def _renames(
+    src: T.StructType, dst: T.StructType, skip: tuple | list = ()
+) -> list[tuple[str, T.DataType, str]]:
+    """``_cast_select`` triples renaming ``src``'s fields to ``dst``'s
+    (the physical and logical schemas, either way round), leaving out
+    target names in ``skip``."""
+    return [
+        (_sql_name(a.name), b.dataType, b.name)
+        for a, b in zip(src.fields, dst.fields)
+        if b.name not in skip
+    ]
+
+
+def _group_logical(
+    schema: T.StructType,
+    partition_columns: list[str],
+    logical_to_phys: dict[str, str],
+    pvals: dict,
+) -> list[tuple[str, T.DataType, str]]:
+    """``_cast_select`` triples for one partition group's logical view of
+    a data-column scan: partition columns as typed literals of the
+    group's values, so predicates and assignments may reference them."""
+    return [
+        (
+            _sql_partition_lit(pvals.get(logical_to_phys[f.name]))
+            if f.name in partition_columns
+            else _sql_name(logical_to_phys[f.name]),
+            f.dataType,
+            f.name,
+        )
+        for f in schema.fields
+    ]
+
+
+def _sql_partition_lit(value: str | None) -> str:
+    """A logged partition value as SQL text (typed by a cast at the
+    caller): NULL, or the value's UTF-8 bytes as a binary literal cast
+    to string, which needs no escaping whatever the value or parser
+    settings."""
+    if value is None or value == HIVE_NULL:
+        return "NULL"
+    return f"CAST(X'{value.encode().hex()}' AS STRING)"
 
 
 def _mapped_schema(
@@ -1072,9 +1190,7 @@ def _verify_physical_names(
 
 
 def _typed_partition_lit(value: str | None, dtype: T.DataType):
-    if value is None or value == HIVE_NULL:
-        return F.lit(None).cast(dtype)
-    return F.lit(value).cast(dtype)
+    return F.expr(_sql_partition_lit(value)).cast(dtype)
 
 
 def _hive_encoded_values(rel: str, part_cols: list[str]) -> dict[str, str]:
@@ -1276,16 +1392,12 @@ def read_delta_lite(
         for f, pf in zip(schema.fields, phys_schema.fields)
         if f.name in state.partition_columns
     ]
+    to_logical = _renames(phys_schema, schema)
 
     def _logicalize(df: DataFrame) -> DataFrame:
         if mapping == "none":
             return df
-        return df.select(
-            *[
-                _quoted(pf.name).cast(f.dataType).alias(f.name)
-                for f, pf in zip(schema.fields, phys_schema.fields)
-            ]
-        )
+        return _cast_select(df, to_logical)
 
     data_schema = T.StructType(
         [f for f in phys_schema.fields if f.name not in phys_part_cols]
@@ -2719,22 +2831,13 @@ _APPEND_RETRIES = 10  # bounded optimistic-concurrency retries for append
 # cost a file per delete, huge ones shouldn't bloat the JSON log
 DV_INLINE_THRESHOLD = 512
 
-# delete_rows materializes ONE file's deleted positions in the task
-# serializing that file's DV (a python set, ~60 B/position; 2^25 is
-# ~2 GiB worst case). Past this, most of the file is deleted and a
-# rewrite (overwrite) is the right physical operation anyway — the
-# valve raises with that remedy instead of OOMing the executor.
-DELETE_MAX_FILE_POSITIONS = 1 << 25
-
 # delete_rows funnels DV bytes through the DRIVER at two points: old
-# blobs are loaded to feed the cogroup, and new per-file blobs stream
-# back for the log commit. Per-file size is bounded by
-# DELETE_MAX_FILE_POSITIONS, but the SUM across files is not — this
-# caps it (raise-with-remedy, same contract as the per-file valve).
-# New blobs stream via toLocalIterator with u-storage .bin files
-# written incrementally, so peak driver memory is one blob + the
-# retained inline descriptors; the cap still bounds the total work a
-# single commit is allowed to funnel driver-side.
+# blobs are loaded to union with the new positions, and new per-file
+# blobs are framed for the log commit. This caps the SUM across files on
+# both sides (raise-with-remedy). New containers arrive in one Arrow
+# fetch and u-storage .bin files are written as each file's blob is
+# framed, so the cap bounds the total work a single commit may funnel
+# driver-side.
 DELETE_MAX_TOTAL_DV_BYTES = 256 << 20
 
 
@@ -2743,19 +2846,23 @@ def _dv_union_blobs(
     base: str,
     matched: DataFrame,
     old_dvs: dict[str, dict],
-) -> DataFrame:
+) -> Iterator[tuple[str, bytes, int]]:
     """(__file hadoop-encoded path, __pos) matched row positions ->
-    (__file, dv blob, card): each touched file's new deletion vector is
-    the UNION of its existing DV and the matched positions, serialized
-    EXECUTOR-side (one task per file). Old DV blobs, verified once, are
-    shipped per file through a COGROUP (not a broadcast of every blob
-    to every executor, and not a join that would duplicate a blob onto
-    every matched row): each file's compact roaring bytes travel
-    exactly once, to the one task serializing that file's new DV.
-    Files whose position set did not grow (every match already masked)
-    emit nothing, so a fully-no-op command can skip committing.
-    Shared by delete_rows and the DV write path of update_rows (r13)."""
-    old_rows = []
+    ``(file, blob, card)`` per touched file, sorted by file: each file's
+    new deletion vector is the UNION of its existing DV and the matched
+    positions. Files whose position set did not grow (every match
+    already masked) yield nothing, so a fully-no-op command can skip
+    committing. Shared by delete_rows and the DV write paths of
+    update_rows and merge_rows.
+
+    Spark builds every roaring container in ONE aggregate per (file,
+    ``pos >> 16``): the sorted distinct low 16 bits when the container
+    holds at most 4096 positions (an array container), else the two
+    ``bitmap_construct_agg`` halves (32,768 bits each) concatenated,
+    which is byte for byte a roaring bitset container. One ``toArrow()``
+    fetches them all; the driver unions a file's old DV per container
+    and roaring_lite frames the result. No Python worker starts."""
+    old: dict[str, dict[int, tuple[int, bytes]]] = {}
     old_total = 0
     for rel, dv in sorted(old_dvs.items()):
         blob = _resolve_dv_blob(base, dv)
@@ -2767,98 +2874,110 @@ def _dv_union_blobs(
                 "bytes; delete in smaller batches (narrower predicates) "
                 "or compact the table via overwrite first"
             )
-        n = count_roaring_bitmap_array(blob)
-        card = dv.get("cardinality")
-        if card is not None and int(card) != n:
-            raise ValueError(
-                f"deletion vector for {rel!r}: descriptor cardinality "
-                f"{card} != {n} parsed positions"
-            )
-        old_rows.append(
-            (
-                _hadoop_path_encode(
-                    os.path.abspath(os.path.join(base, rel))
-                ),
-                bytearray(blob),
-            )
+        old[_dv_file_key(base, rel)] = {
+            key: (card, payload)
+            for key, card, payload in _dv_containers(rel, dv, blob)
+        }
+
+    table = (
+        matched.selectExpr(
+            "__file",
+            "shiftright(__pos, 16) AS __key",
+            "CAST(__pos & 65535 AS INT) AS __low",
         )
-    old_df = spark.createDataFrame(
-        old_rows or [("", bytearray(b""))], "__file string, old binary"
+        .groupBy("__file", "__key")
+        .agg(
+            F.expr("bitmap_construct_agg(IF(__low < 32768, __low, NULL))")
+            .alias("__h0"),
+            F.expr(
+                "bitmap_construct_agg(IF(__low >= 32768, __low - 32768, NULL))"
+            ).alias("__h1"),
+            F.expr("array_sort(collect_set(__low))").alias("__lows"),
+        )
+        .selectExpr(
+            "__file",
+            "__key",
+            "bitmap_count(__h0) + bitmap_count(__h1) AS __card",
+            "__lows",
+            "concat(__h0, __h1) AS __bits",
+        )
+        .selectExpr(
+            "__file",
+            "__key",
+            "__card",
+            "IF(__card <= 4096, __lows, NULL) AS __lows",
+            "IF(__card > 4096, __bits, NULL) AS __bits",
+        )
+        .toArrow()
+        .sort_by([("__file", "ascending"), ("__key", "ascending")])
     )
+    return _union_containers(table, old)
 
-    def _serialize(left, right):
-        import pandas as pd
 
-        from lcr_etl_upgrade_spark.roaring_lite import (
-            parse_roaring_bitmap_array,
-            serialize_roaring_bitmap_array,
-        )
-
-        if left.empty:  # old DV whose file had no new matches: untouched
-            return pd.DataFrame({"__file": [], "dv": [], "card": []})
-        fname = left["__file"].iloc[0]
-        positions = set(int(p) for p in left["__pos"])
-        old_n = 0
-        if not right.empty and len(right["old"].iloc[0]):
-            old = parse_roaring_bitmap_array(
-                bytes(right["old"].iloc[0]),
-                max_values=DELETE_MAX_FILE_POSITIONS,
+def _union_containers(
+    table, old: dict[str, dict[int, tuple[int, bytes]]]
+) -> Iterator[tuple[str, bytes, int]]:
+    """_dv_union_blobs' driver half: group the fetched containers by
+    file, union each with the file's old containers, frame the grown
+    ones."""
+    files = table.column("__file").to_pylist()
+    keys = table.column("__key").to_pylist()
+    cards = table.column("__card").to_pylist()
+    bits = table.column("__bits").to_pylist()
+    lows = table.column("__lows").combine_chunks()
+    lows_off = lows.offsets.to_numpy()
+    lows_val = lows.values.to_numpy(zero_copy_only=False)
+    for fname, rows in groupby(range(len(files)), key=files.__getitem__):
+        merged = dict(old.get(fname, {}))
+        old_n = sum(card for card, _ in merged.values())
+        for i in rows:
+            card = cards[i]
+            payload = (
+                bits[i]
+                if card > 4096
+                else lows_val[lows_off[i] : lows_off[i + 1]]
+                .astype("<u2")
+                .tobytes()
             )
-            old_n = len(old)
-            positions |= old
-        if len(positions) == old_n:
+            if keys[i] in merged:
+                u = np.union1d(
+                    container_lows(*merged[keys[i]]),
+                    container_lows(card, payload),
+                )
+                card, payload = len(u), container_payload(u)
+            merged[keys[i]] = (card, payload)
+        n = sum(card for card, _ in merged.values())
+        if n == old_n:
             # every matched row was ALREADY masked by the existing DV
             # (the predicate runs over the raw scan): emitting would
             # commit a byte-identical DV under a fresh uuid — skip, so
             # a fully-no-op delete returns state.version uncommitted
-            return pd.DataFrame({"__file": [], "dv": [], "card": []})
-        if len(positions) > DELETE_MAX_FILE_POSITIONS:
-            raise ValueError(
-                f"{len(positions)} deleted positions for one file "
-                f"exceed DELETE_MAX_FILE_POSITIONS "
-                f"({DELETE_MAX_FILE_POSITIONS}); with most of a file "
-                "deleted, rewrite it via overwrite instead of masking"
-            )
-        blob = serialize_roaring_bitmap_array(positions)
-        return pd.DataFrame(
-            {
-                "__file": [fname],
-                "dv": [blob],
-                "card": [len(positions)],
-            }
-        )
-
-    return (
-        matched.groupBy("__file")
-        .cogroup(old_df.groupBy("__file"))
-        .applyInPandas(_serialize, "__file string, dv binary, card long")
-    )
+            continue
+        yield fname, frame_roaring_bitmap_array(
+            [(k, card, payload) for k, (card, payload) in sorted(merged.items())]
+        ), n
 
 
 def _materialize_dv_descriptors(
     base: str,
-    touched_df: DataFrame,
+    blobs: Iterator[tuple[str, bytes, int]],
     enc_to_rel: dict[str, str],
     inline_threshold: int,
     dv_written: list[str],
 ) -> list[tuple[str, dict]]:
-    """Stream _dv_union_blobs' result one partition at a time into DV
-    descriptors: u-storage blobs land on disk IMMEDIATELY (staged names
-    appended to ``dv_written`` for rollback) and only compact
-    descriptors (plus inline blobs, each <= inline_threshold) stay
-    driver-side, so peak driver memory is one in-flight blob — with a
+    """_dv_union_blobs' ``(file, blob, card)`` results -> DV descriptors:
+    u-storage blobs land on disk IMMEDIATELY (staged names appended to
+    ``dv_written`` for rollback) and only compact descriptors (plus
+    inline blobs, each <= inline_threshold) stay driver-side — with a
     hard cap on the total bytes a single commit may funnel through."""
     import zlib
 
     per_file: list[tuple[str, dict]] = []
     new_total = 0
-    for row in touched_df.toLocalIterator():
-        rel = enc_to_rel.get(row["__file"])
+    for fname, blob, card in blobs:
+        rel = enc_to_rel.get(fname)
         if rel is None:  # file vanished between replay and scan?
-            raise ValueError(
-                f"scan produced an unknown file key {row['__file']!r}"
-            )
-        blob = bytes(row["dv"])
+            raise ValueError(f"scan produced an unknown file key {fname!r}")
         new_total += len(blob)
         if new_total > DELETE_MAX_TOTAL_DV_BYTES:
             raise ValueError(
@@ -2875,7 +2994,7 @@ def _materialize_dv_descriptors(
                 "pathOrInlineDv": z85_encode(blob + b"\x00" * pad),
                 "offset": None,
                 "sizeInBytes": len(blob),
-                "cardinality": int(row["card"]),
+                "cardinality": card,
             }
         else:
             dv_uuid = uuid.uuid4()
@@ -2894,7 +3013,7 @@ def _materialize_dv_descriptors(
                 "pathOrInlineDv": z85_encode(dv_uuid.bytes),
                 "offset": 1,
                 "sizeInBytes": len(blob),
-                "cardinality": int(row["card"]),
+                "cardinality": card,
             }
         per_file.append((rel, descriptor))
     return per_file
@@ -2947,13 +3066,13 @@ def delete_rows(
     - the predicate is evaluated over the LOGICAL schema (column-mapped
       tables scan physically and rename first, like read_delta_lite);
     - per-file positions come from ``_metadata.row_index`` and are
-      serialized to bitmaps EXECUTOR-side (one task per touched file via
-      applyInPandas); only the compact roaring bytes reach the driver,
-      STREAMED one partition at a time (u-storage blobs hit disk
-      immediately; a fully-no-op delete — every match already masked —
-      returns the current version without committing), with
-      DELETE_MAX_TOTAL_DV_BYTES capping the total funneled per commit
-      on both the old-blob and new-blob sides;
+      built into roaring containers by one Spark aggregate
+      (``_dv_union_blobs``); only the containers reach the driver, in
+      one Arrow fetch, where they are framed into bitmaps (u-storage
+      blobs hit disk immediately; a fully-no-op delete — every match
+      already masked — returns the current version without
+      committing), with DELETE_MAX_TOTAL_DV_BYTES capping the total
+      funneled per commit on both the old-blob and new-blob sides;
     - a file that already carries a DV gets the UNION of its old and new
       positions (the protocol's re-add-replaces-DV rule), committed as
       the remove(oldDv) + add(newDv) pair log replay keys on;
@@ -3020,27 +3139,15 @@ def delete_rows(
     else:
         scan = spark.read.schema(phys_schema).parquet(*abs_files)
 
-    meta_cols = [
-        F.regexp_replace(F.col("_metadata.file_path"), r"^file:/+", "/")
-        .alias("__file"),
-        F.col("_metadata.row_index").alias("__pos"),
-    ]
-    logical = scan.select(
-        *[
-            _quoted(pf.name).cast(f.dataType).alias(f.name)
-            for f, pf in zip(schema.fields, phys_schema.fields)
-        ],
-        *meta_cols,
-    )
+    meta_cols = (f"{_FILE_KEY_SQL} AS __file", "_metadata.row_index AS __pos")
+    to_logical = _renames(phys_schema, schema)
+    logical = _cast_select(scan, to_logical, *meta_cols)
     pred = predicate if isinstance(predicate, Column) else F.expr(predicate)
     matched = logical.filter(pred).select("__file", "__pos")
 
-    touched_df = _dv_union_blobs(spark, base, matched, state.dvs)
+    touched = _dv_union_blobs(spark, base, matched, state.dvs)
 
-    enc_to_rel = {
-        _hadoop_path_encode(os.path.abspath(os.path.join(base, rel))): rel
-        for rel in rels
-    }
+    enc_to_rel = {_dv_file_key(base, rel): rel for rel in rels}
     import time
 
     now_ms = int(time.time() * 1000)
@@ -3059,7 +3166,7 @@ def delete_rows(
     dv_written: list[str] = []  # staged .bin files, for rollback
     try:
         per_file = _materialize_dv_descriptors(
-            base, touched_df, enc_to_rel, inline_threshold, dv_written
+            base, touched, enc_to_rel, inline_threshold, dv_written
         )
         if not per_file:
             return state.version
@@ -3087,13 +3194,9 @@ def delete_rows(
                 cdc_scan = spark.read.schema(phys_schema).parquet(
                     *touched_abs
                 )
-            cdc_src = cdc_scan.select(
-                *[
-                    _quoted(pf.name).cast(f.dataType).alias(f.name)
-                    for f, pf in zip(schema.fields, phys_schema.fields)
-                ],
-                *meta_cols,
-            ).filter(pred)
+            cdc_src = _cast_select(cdc_scan, to_logical, *meta_cols).filter(
+                pred
+            )
             old_touched = {
                 r: state.dvs[r] for r in touched_rels if r in state.dvs
             }
@@ -3111,12 +3214,11 @@ def delete_rows(
                         & (F.col("__pos") == posdf["__dv_idx"]),
                         "left_anti",
                     )
-            cdc_out = cdc_src.select(
-                *[
-                    _quoted(f.name).cast(pf.dataType).alias(pf.name)
-                    for f, pf in zip(schema.fields, phys_schema.fields)
-                ]
-            ).withColumn("_change_type", F.lit("delete"))
+            cdc_out = _cast_select(
+                cdc_src,
+                _renames(schema, phys_schema),
+                "'delete' AS _change_type",
+            )
             cdc_dir = os.path.join(base, "_change_data")
             os.makedirs(cdc_dir, exist_ok=True)
             for rel_cdc, size in _stage_and_move(
@@ -3373,25 +3475,14 @@ def update_rows(
         )
     else:
         scan = spark.read.schema(phys_schema).parquet(*abs_files)
-    logical_cols = [
-        _quoted(pf.name).cast(f.dataType).alias(f.name)
-        for f, pf in zip(schema.fields, phys_schema.fields)
-    ]
+    to_logical = _renames(phys_schema, schema)
     live = _apply_dv_filter(spark, scan, base, dv_ver, rels)
     pred = condition if isinstance(condition, Column) else F.expr(condition)
-    enc_to_rel = {
-        _hadoop_path_encode(os.path.abspath(os.path.join(base, rel))): rel
-        for rel in rels
-    }
+    enc_to_rel = {_dv_file_key(base, rel): rel for rel in rels}
     touched_counts = {
         enc_to_rel[r["__file"]]: int(r["cnt"])
         for r in (
-            live.select(
-                *logical_cols,
-                F.regexp_replace(
-                    F.col("_metadata.file_path"), r"^file:/+", "/"
-                ).alias("__file"),
-            )
+            _cast_select(live, to_logical, f"{_FILE_KEY_SQL} AS __file")
             .filter(pred)
             .groupBy("__file")
             .agg(F.count(F.lit(1)).alias("cnt"))
@@ -3456,6 +3547,11 @@ def update_rows(
             rcv_col = f"_row-commit-version-col-{uuid.uuid4().hex}"
             rt_cfg[_MAT_ROW_CV_KEY] = rcv_col
             rt_meta_changed = True
+    rt_sql = (
+        (_sql_name(rid_col), _sql_name(rcv_col)) if row_tracking else ()
+    )
+    to_physical = _renames(schema, phys_schema, phys_part_cols)
+
     next_row_id = 0
     if row_tracking:
         domain = state.domains.get("delta.rowTracking")
@@ -3580,25 +3676,12 @@ def update_rows(
                 gdf = _apply_dv_filter(spark, gdf, base, dv_ver, group)
             # logical view (partition columns as typed literals so the
             # predicate/assignments may reference them)
-            lg = gdf.select(
-                *[
-                    (
-                        _typed_partition_lit(
-                            pvals.get(logical_to_phys[f.name]),
-                            f.dataType,
-                        ).alias(f.name)
-                        if f.name in state.partition_columns
-                        else _quoted(logical_to_phys[f.name])
-                        .cast(f.dataType)
-                        .alias(f.name)
-                    )
-                    for f in schema.fields
-                ],
-                *(
-                    [_quoted(rid_col), _quoted(rcv_col)]
-                    if row_tracking
-                    else []
+            lg = _cast_select(
+                gdf,
+                _group_logical(
+                    schema, state.partition_columns, logical_to_phys, pvals
                 ),
+                *rt_sql,
             )
             upd = _updated(lg)
             if row_tracking:
@@ -3631,18 +3714,7 @@ def update_rows(
                 )
             # back to physical layout, partition columns dropped (they
             # live in the directory name)
-            out_phys = upd.select(
-                *[
-                    _quoted(f.name).cast(pf.dataType).alias(pf.name)
-                    for f, pf in zip(schema.fields, phys_schema.fields)
-                    if pf.name not in phys_part_cols
-                ],
-                *(
-                    [_quoted(rid_col), _quoted(rcv_col)]
-                    if row_tracking
-                    else []
-                ),
-            )
+            out_phys = _cast_select(upd, to_physical, *rt_sql)
             part_dir = os.path.dirname(group[0])
             staging = os.path.join(base, f"_staging-{uuid.uuid4().hex}")
             out_phys.write.mode("overwrite").parquet(staging)
@@ -3715,24 +3787,16 @@ def update_rows(
             # CDF obligation: matched rows only, old and new images
             if cdf_on:
                 matched_lg = lg.filter(pred)
-                pre = matched_lg.select(
-                    *[
-                        _quoted(f.name).cast(pf.dataType).alias(pf.name)
-                        for f, pf in zip(
-                            schema.fields, phys_schema.fields
-                        )
-                        if pf.name not in phys_part_cols
-                    ]
-                ).withColumn("_change_type", F.lit("update_preimage"))
-                post = _updated(matched_lg).select(
-                    *[
-                        _quoted(f.name).cast(pf.dataType).alias(pf.name)
-                        for f, pf in zip(
-                            schema.fields, phys_schema.fields
-                        )
-                        if pf.name not in phys_part_cols
-                    ]
-                ).withColumn("_change_type", F.lit("update_postimage"))
+                pre = _cast_select(
+                    matched_lg,
+                    to_physical,
+                    "'update_preimage' AS _change_type",
+                )
+                post = _cast_select(
+                    _updated(matched_lg),
+                    to_physical,
+                    "'update_postimage' AS _change_type",
+                )
                 cdc_dir = os.path.join(base, "_change_data")
                 os.makedirs(cdc_dir, exist_ok=True)
                 cdc_sub = part_dir  # mirror the data layout per group
@@ -3814,12 +3878,10 @@ def update_rows(
                 gdf = (
                     spark.read.schema(T.StructType(data_fields))
                     .parquet(*group_abs)
-                    .select(
+                    .selectExpr(
                         "*",
-                        F.regexp_replace(
-                            F.col("_metadata.file_path"), r"^file:/+", "/"
-                        ).alias("__file"),
-                        F.col("_metadata.row_index").alias("__pos"),
+                        f"{_FILE_KEY_SQL} AS __file",
+                        "_metadata.row_index AS __pos",
                     )
                 )
                 gdf = _apply_dv_filter(spark, gdf, base, dv_ver, group)
@@ -3827,25 +3889,12 @@ def update_rows(
             # point: downstream cost is proportional to matched rows,
             # not to the files they live in
             matched_lg = (
-                gdf.select(
-                    *[
-                        (
-                            _typed_partition_lit(
-                                pvals.get(logical_to_phys[f.name]),
-                                f.dataType,
-                            ).alias(f.name)
-                            if f.name in state.partition_columns
-                            else _quoted(logical_to_phys[f.name])
-                            .cast(f.dataType)
-                            .alias(f.name)
-                        )
-                        for f in schema.fields
-                    ],
-                    *(
-                        [_quoted(rid_col), _quoted(rcv_col)]
-                        if row_tracking
-                        else []
+                _cast_select(
+                    gdf,
+                    _group_logical(
+                        schema, state.partition_columns, logical_to_phys, pvals
                     ),
+                    *rt_sql,
                     "__file",
                     "__pos",
                 )
@@ -3894,18 +3943,7 @@ def update_rows(
                     upd, obs, name_map = _attach_constraint_observer(
                         upd, schema, constraints, path
                     )
-                out_phys = upd.select(
-                    *[
-                        _quoted(f.name).cast(pf.dataType).alias(pf.name)
-                        for f, pf in zip(schema.fields, phys_schema.fields)
-                        if pf.name not in phys_part_cols
-                    ],
-                    *(
-                        [_quoted(rid_col), _quoted(rcv_col)]
-                        if row_tracking
-                        else []
-                    ),
-                )
+                out_phys = _cast_select(upd, to_physical, *rt_sql)
                 # replacement rows are a small fraction of the group by
                 # construction — coalesce to roughly the table's own
                 # rows-per-file so a 1% update appends ~1 right-sized
@@ -3969,33 +4007,15 @@ def update_rows(
 
                 # (c) CDF obligation — identical to the rewrite path's
                 if cdf_on:
-                    pre = matched_lg.select(
-                        *[
-                            _quoted(f.name).cast(pf.dataType).alias(
-                                pf.name
-                            )
-                            for f, pf in zip(
-                                schema.fields, phys_schema.fields
-                            )
-                            if pf.name not in phys_part_cols
-                        ]
-                    ).withColumn(
-                        "_change_type", F.lit("update_preimage")
+                    pre = _cast_select(
+                        matched_lg,
+                        to_physical,
+                        "'update_preimage' AS _change_type",
                     )
-                    post = _updated(
-                        matched_lg.drop("__file", "__pos")
-                    ).select(
-                        *[
-                            _quoted(f.name).cast(pf.dataType).alias(
-                                pf.name
-                            )
-                            for f, pf in zip(
-                                schema.fields, phys_schema.fields
-                            )
-                            if pf.name not in phys_part_cols
-                        ]
-                    ).withColumn(
-                        "_change_type", F.lit("update_postimage")
+                    post = _cast_select(
+                        _updated(matched_lg.drop("__file", "__pos")),
+                        to_physical,
+                        "'update_postimage' AS _change_type",
                     )
                     cdc_dir = os.path.join(base, "_change_data")
                     os.makedirs(cdc_dir, exist_ok=True)
@@ -4227,11 +4247,10 @@ def _merge_rewrite_groups(
     data_fields = [
         f for f in phys_schema.fields if f.name not in phys_part_cols
     ]
-    phys_data_cols = [
-        (f, pf)
-        for f, pf in zip(schema.fields, phys_schema.fields)
-        if pf.name not in phys_part_cols
-    ]
+    to_physical = _renames(schema, phys_schema, phys_part_cols)
+    rt_sql = (
+        (_sql_name(rid_col), _sql_name(rcv_col)) if row_tracking else ()
+    )
 
     for key, group in sorted(by_part.items()):
         pvals = dict(key)
@@ -4263,30 +4282,20 @@ def _merge_rewrite_groups(
                 T.StructType(data_fields)
             ).parquet(*group_abs)
             gdf = _apply_dv_filter(spark, gdf, base, dv_ver, group)
-            gdf = gdf.select(
+            gdf = gdf.selectExpr(
                 "*",
-                F.regexp_replace(
-                    F.col("_metadata.file_path"), r"^file:/+", "/"
-                ).alias("__mrg_base"),
-                F.col("_metadata.row_index").alias("__mrg_pos"),
+                f"{_FILE_KEY_SQL} AS __mrg_base",
+                "_metadata.row_index AS __mrg_pos",
             )
         # logical view, partition columns as typed literals
-        lg = gdf.select(
-            *[
-                (
-                    _typed_partition_lit(
-                        pvals.get(logical_to_phys[f.name]), f.dataType
-                    ).alias(f.name)
-                    if f.name in state.partition_columns
-                    else _quoted(logical_to_phys[f.name])
-                    .cast(f.dataType)
-                    .alias(f.name)
-                )
-                for f in schema.fields
-            ],
-            *([_quoted(rid_col), _quoted(rcv_col)] if row_tracking else []),
-            F.col("__mrg_base"),
-            F.col("__mrg_pos"),
+        lg = _cast_select(
+            gdf,
+            _group_logical(
+                schema, state.partition_columns, logical_to_phys, pvals
+            ),
+            *rt_sql,
+            "__mrg_base",
+            "__mrg_pos",
         )
         j = lg.alias("t")
         if dec is not None:
@@ -4356,25 +4365,15 @@ def _merge_rewrite_groups(
 
         if cdf_on:
             # originals of modified rows, BEFORE the rewrite projection
-            pre = (
-                j.filter(F.col("__mrg_updated"))
-                .select(
-                    *[
-                        _quoted(f.name).cast(pf.dataType).alias(pf.name)
-                        for f, pf in phys_data_cols
-                    ]
-                )
-                .withColumn("_change_type", F.lit("update_preimage"))
+            pre = _cast_select(
+                j.filter(F.col("__mrg_updated")),
+                to_physical,
+                "'update_preimage' AS _change_type",
             )
-            dels = (
-                j.filter(F.col("__mrg_deleted"))
-                .select(
-                    *[
-                        _quoted(f.name).cast(pf.dataType).alias(pf.name)
-                        for f, pf in phys_data_cols
-                    ]
-                )
-                .withColumn("_change_type", F.lit("delete"))
+            dels = _cast_select(
+                j.filter(F.col("__mrg_deleted")),
+                to_physical,
+                "'delete' AS _change_type",
             )
 
         # DV mode writes ONLY the updated rows (deleted rows are just
@@ -4458,28 +4457,17 @@ def _merge_rewrite_groups(
         if cdf_on:
             # derived BEFORE the constraint observer attaches: the cdc
             # staging write must not re-materialize the observed node
-            post = (
-                upd.filter(F.col("__mrg_updated"))
-                .select(
-                    *[
-                        _quoted(f.name).cast(pf.dataType).alias(pf.name)
-                        for f, pf in phys_data_cols
-                    ]
-                )
-                .withColumn("_change_type", F.lit("update_postimage"))
+            post = _cast_select(
+                upd.filter(F.col("__mrg_updated")),
+                to_physical,
+                "'update_postimage' AS _change_type",
             )
         obs = None
         if constraints:
             upd, obs, name_map = _attach_constraint_observer(
                 upd, schema, constraints, path
             )
-        out_phys = upd.select(
-            *[
-                _quoted(f.name).cast(pf.dataType).alias(pf.name)
-                for f, pf in phys_data_cols
-            ],
-            *([_quoted(rid_col), _quoted(rcv_col)] if row_tracking else []),
-        )
+        out_phys = _cast_select(upd, to_physical, *rt_sql)
         if dv_mode:
             # replacement rows are a small fraction of the group by
             # construction — coalesce to roughly the table's own
@@ -4584,12 +4572,7 @@ def _merge_rewrite_groups(
             # mask the affected positions: remove(oldDv) + add(newDv)
             # on the untouched bytes — stats, tags and rowTracking
             # fields stay valid
-            enc_map = {
-                _hadoop_path_encode(
-                    os.path.abspath(os.path.join(base, rel))
-                ): rel
-                for rel in group
-            }
+            enc_map = {_dv_file_key(base, rel): rel for rel in group}
             per_file_dv = _materialize_dv_descriptors(
                 base,
                 _dv_union_blobs(
@@ -4738,12 +4721,7 @@ def _merge_inserts(
         new_rows, obs, name_map = _attach_constraint_observer(
             new_rows, schema, constraints, path
         )
-    out_phys = new_rows.select(
-        *[
-            _quoted(f.name).cast(pf.dataType).alias(pf.name)
-            for f, pf in zip(schema.fields, phys_schema.fields)
-        ]
-    )
+    out_phys = _cast_select(new_rows, _renames(schema, phys_schema))
     if cdf_on:
         # reused by the cdc insert staging below — one anti-join, not two
         out_phys = out_phys.persist()
@@ -5132,10 +5110,7 @@ def merge_rows(
     abs_files = [os.path.join(base, rel) for rel in rels]
     # row identity = (encoded full path, row position) — basenames
     # alone collide across hive partition directories
-    base_to_rel = {
-        _hadoop_path_encode(os.path.abspath(os.path.join(base, rel))): rel
-        for rel in rels
-    }
+    base_to_rel = {_dv_file_key(base, rel): rel for rel in rels}
     if rels and mapping != "none":
         # evolved columns are absent from pre-evolution files by
         # definition — verify only the pre-existing physical names
@@ -5161,10 +5136,7 @@ def merge_rows(
 
     dv_ver = _dv_verify(base, state.dvs) if state.dvs else {}
     on_cond = on if isinstance(on, Column) else F.expr(on)
-    logical_cols = [
-        _quoted(pf.name).cast(f.dataType).alias(f.name)
-        for f, pf in zip(schema.fields, phys_schema.fields)
-    ]
+    to_logical = _renames(phys_schema, schema)
 
     def _tgt_scan(with_pos: bool) -> DataFrame:
         """The live logical target, optionally with (basename, row
@@ -5179,16 +5151,14 @@ def merge_rows(
             scan = spark.read.schema(phys_schema).parquet(*abs_files)
         live = _apply_dv_filter(spark, scan, base, dv_ver, rels)
         extra = (
-            [
-                F.regexp_replace(
-                    F.col("_metadata.file_path"), r"^file:/+", "/"
-                ).alias("__mrg_base"),
-                F.col("_metadata.row_index").alias("__mrg_pos"),
-            ]
+            (
+                f"{_FILE_KEY_SQL} AS __mrg_base",
+                "_metadata.row_index AS __mrg_pos",
+            )
             if with_pos
-            else []
+            else ()
         )
-        return live.select(*logical_cols, *extra)
+        return _cast_select(live, to_logical, *extra)
 
     # matched-update clause indices / assigned-column bookkeeping
     upd_idx = [i for i, (k, _c, _v) in enumerate(matched) if k == "update"]
@@ -6309,8 +6279,8 @@ def read_delta_changes(
     Scale shape: one parquet scan per (commit, change class, partition
     tuple) over ONLY the changed files; DV diffs reuse the executor-side
     position expansion and broadcast-vs-shuffle valve of the main
-    reader. Nothing driver-side grows beyond the file/DV descriptors —
-    the same contract as replay_log itself.
+    reader. Nothing driver-side grows beyond the file descriptors and
+    the serialized DV containers.
     """
     base = _local(path)
     log_dir = _log_dir(path)
@@ -6435,12 +6405,10 @@ def read_delta_changes(
             df = spark.read.schema(data_schema).parquet(
                 *[os.path.join(base, rel) for rel in sorted(rels)]
             )
-            df = df.select(
+            df = df.selectExpr(
                 "*",
-                F.regexp_replace(
-                    F.col("_metadata.file_path"), r"^file:/+", "/"
-                ).alias("__f"),
-                F.col("_metadata.row_index").alias("__i"),
+                f"{_FILE_KEY_SQL} AS __f",
+                "_metadata.row_index AS __i",
             )
             for c, vv in zip(phys_part_cols, key):
                 df = df.withColumn(c, _typed_partition_lit(vv, types[c]))
@@ -6455,6 +6423,8 @@ def read_delta_changes(
         for b in parts[1:]:
             out = out.unionByName(b)
         return out
+
+    to_logical = _renames(phys_schema, schema)
 
     def _dv_join(df: DataFrame, dv_map: dict[str, dict | None], how: str):
         present = {r: d for r, d in dv_map.items() if d}
@@ -6473,12 +6443,7 @@ def read_delta_changes(
     def _finish(df: DataFrame, ctype: str, v: int, ts_ms: int) -> DataFrame:
         df = df.drop("__f", "__i")
         if mapping != "none":
-            df = df.select(
-                *[
-                    _quoted(pf.name).cast(f.dataType).alias(f.name)
-                    for f, pf in zip(schema.fields, phys_schema.fields)
-                ]
-            )
+            df = _cast_select(df, to_logical)
         return df.select(
             "*",
             F.lit(ctype).alias("_change_type"),
@@ -6521,13 +6486,7 @@ def read_delta_changes(
 
     def _finish_cdc(df: DataFrame, v: int, ts_ms: int) -> DataFrame:
         if mapping != "none":
-            df = df.select(
-                *[
-                    _quoted(pf.name).cast(f.dataType).alias(f.name)
-                    for f, pf in zip(schema.fields, phys_schema.fields)
-                ],
-                "_change_type",
-            )
+            df = _cast_select(df, to_logical, "_change_type")
         return df.select(
             *[_quoted(f.name) for f in schema.fields],
             F.col("_change_type"),
@@ -6659,9 +6618,7 @@ def _with_materialized_row_ids(
             F.col("_metadata.row_index").alias("__rt_idx"),
             *(
                 [
-                    F.regexp_replace(
-                        F.col("_metadata.file_path"), r"^file:/+", "/"
-                    ).alias("__rt_path")
+                    F.expr(_FILE_KEY_SQL).alias("__rt_path")
                 ]
                 if keep_path
                 else []

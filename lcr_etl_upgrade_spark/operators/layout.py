@@ -151,13 +151,14 @@ def optimize_layout(
         # through double and lose exactness past 2^53)
         zfile = F.expr(f"(__zkey * {int(num_files)}) div {key_space}L")
     else:
-        zfile = (
-            F.floor(
-                F.col("__zkey").cast("decimal(38,0)")
-                * F.lit(int(num_files))
-                / F.lit(key_space).cast("decimal(38,0)")
-            )
-        ).cast("long")
+        # exact decimal integer division. The divisor is built from a
+        # string: 2^63 (3 cols x 21 bits) overflows the long an int
+        # literal is sent to the JVM as. ``/`` would round the quotient
+        # to scale 6, so keys just below 2^63 landed in file num_files.
+        zfile = F.expr(
+            f"(CAST(__zkey AS DECIMAL(38,0)) * {int(num_files)}) "
+            f"div CAST('{key_space}' AS DECIMAL(38,0))"
+        )
     keyed = df.withColumn("__zkey", zorder_key(buckets, bits)).withColumn(
         "__zfile", zfile
     )

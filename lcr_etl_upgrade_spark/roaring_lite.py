@@ -1,4 +1,4 @@
-"""Pure-Python readers for the two PUBLIC formats Delta deletion
+"""Pure-Python (numpy) codecs for the two PUBLIC formats Delta deletion
 vectors are built from — no roaring/bitmap package dependency:
 
 - **Z85** (ZeroMQ spec 32/Z85): the ASCII armor Delta uses for inline
@@ -13,17 +13,21 @@ Both are parsed defensively: any structural violation raises
 ``ValueError`` with the offending detail — a deletion vector read must
 never silently drop or invent deleted rows.
 
-One generator (``_iter_containers``) is the single implementation all
-three public entry points share, so the count, collect and streaming
-paths can never diverge structurally:
+One generator (``iter_roaring_containers``, per-container sorted uint16
+lows) is the single implementation every reader shares, so the count,
+collect and container paths can never diverge structurally:
 
-- ``parse_roaring_bitmap_array`` — full value set (driver-side small
-  bitmaps, tests);
+- ``parse_roaring_bitmap_array`` — full value set (small bitmaps, tests);
 - ``count_roaring_bitmap_array`` — exact distinct count in O(one
-  container) memory (driver-side integrity check for DVs of ANY size;
-  bitset containers count by popcount, never expanding);
-- ``iter_roaring_bitmap_array`` — per-container value batches in O(one
-  container) memory (executor-side streaming expansion in delta_lite).
+  container) memory;
+- ``iter_roaring_bitmap_array`` — per-container value sets;
+- ``iter_roaring_containers`` — the containers themselves: delta_lite's
+  DV reader ships them to Spark for expansion, and its DV writer unions
+  old containers with new ones.
+
+The write direction is one framer, ``frame_roaring_bitmap_array``, over
+canonical containers (``container_payload``); ``serialize_roaring_bitmap_array``
+is the value-set front end to it.
 
 Used by ``delta_lite`` (deletionVectors reader feature); cites only the
 public specs (delta.io PROTOCOL.md "Deletion Vectors", RoaringFormatSpec,
@@ -34,6 +38,8 @@ from __future__ import annotations
 
 import struct
 from collections.abc import Iterator
+
+import numpy as np
 
 _Z85_CHARS = (
     "0123456789abcdefghijklmnopqrstuvwxyz"
@@ -81,13 +87,17 @@ def z85_encode(data: bytes) -> str:
     return "".join(out)
 
 
-def _iter_containers(
-    data: bytes, max_values: int | None, collect: bool
-) -> Iterator[tuple[int, set[int] | None]]:
+def iter_roaring_containers(
+    data: bytes, max_values: int | None = None
+) -> Iterator[tuple[int, np.ndarray]]:
     """THE walker: validate a whole RoaringBitmapArray structurally and
-    yield ``(n_distinct, values64 | None)`` per container, values only
-    when ``collect`` — so count/collect/stream consumers share one
-    implementation and can never disagree on what a blob contains.
+    yield ``(key, lows)`` per container, where ``key`` is the 48-bit
+    container key (bitmap index << 16 | 16-bit container key) and
+    ``lows`` the container's sorted distinct low 16 bits (uint16) — the
+    container holds ``(key << 16) | low`` for each low. Every other
+    reader (count, collect, stream, the delta_lite DV paths) goes
+    through here, so none can disagree on what a blob contains. Memory
+    is O(one container): at most 65,536 values.
 
     Per the spec: container keys strictly increase within a bitmap
     (violations raise — silent cross-container dedup would let a
@@ -99,9 +109,8 @@ def _iter_containers(
     descriptive header's cardinality claim, which this walker tolerates
     overstating (duplicate array values, overlapping runs): counting
     the claim would make a blob pass the driver's count-based verify
-    yet fail the same-bound expansion at action time. The overshoot is
-    capped at one container (≤65,536 values) before the raise.
-    Structural errors surface even in count-only mode; the final
+    yet fail the same-bound expansion later. The overshoot is capped at
+    one container (≤65,536 values) before the raise. The final
     trailing-bytes check runs when the iterator is exhausted."""
     if len(data) < 12:
         raise ValueError(f"deletion-vector bitmap too short ({len(data)} B)")
@@ -120,15 +129,7 @@ def _iter_containers(
         if pos + n > len(data):
             raise ValueError(f"truncated roaring bitmap: {what}")
 
-    def bound(what: str) -> None:
-        if max_values is not None and total > max_values:
-            raise ValueError(
-                f"roaring bitmap exceeds the {max_values}-value "
-                f"materialization bound ({what})"
-            )
-
     for bm in range(n_bitmaps):
-        high = bm << 32
         need(4, "cookie")
         (cookie,) = struct.unpack_from("<I", data, pos)
         pos += 4
@@ -148,17 +149,16 @@ def _iter_containers(
         else:
             raise ValueError(f"bad roaring cookie {cookie:#x}")
         need(4 * n_containers, "descriptive headers")
-        headers = [
-            struct.unpack_from("<HH", data, pos + 4 * i)
-            for i in range(n_containers)
-        ]
+        headers = np.frombuffer(
+            data, dtype="<u2", count=2 * n_containers, offset=pos
+        ).reshape(-1, 2)
         pos += 4 * n_containers
         if has_offsets:
             # offsets enable random access; sequential parse ignores them
             need(4 * n_containers, "offsets")
             pos += 4 * n_containers
         prev_key = -1
-        for i, (key, card_minus_1) in enumerate(headers):
+        for i, (key, card_minus_1) in enumerate(headers.tolist()):
             if key <= prev_key:
                 raise ValueError(
                     f"roaring container keys not strictly increasing "
@@ -166,64 +166,52 @@ def _iter_containers(
                 )
             prev_key = key
             cardinality = card_minus_1 + 1
-            base = high | (key << 16)
-            values: set[int] | None = set() if collect else None
             if run_bitset[i // 8] & (1 << (i % 8)):
                 need(2, "run count")
                 (n_runs,) = struct.unpack_from("<H", data, pos)
                 pos += 2
                 need(4 * n_runs, "runs")
-                runs = sorted(
-                    struct.unpack_from("<HH", data, pos + 4 * r)
-                    for r in range(n_runs)
-                )
+                runs = np.frombuffer(
+                    data, dtype="<u2", count=2 * n_runs, offset=pos
+                ).reshape(-1, 2).astype(np.int64)
                 pos += 4 * n_runs
-                n_distinct = 0
-                hi = -1
-                for start, length in runs:
-                    end = start + length  # inclusive
-                    if end > 0xFFFF:
-                        raise ValueError(
-                            f"roaring run ({start}, len {length}) crosses "
-                            "the container's 16-bit boundary"
-                        )
-                    if start > hi:
-                        n_distinct += end - start + 1
-                        hi = end
-                    elif end > hi:
-                        n_distinct += end - hi
-                        hi = end
-                if values is not None:
-                    for start, length in runs:
-                        values.update(
-                            base + v for v in range(start, start + length + 1)
-                        )
-            elif cardinality <= 4096:
-                need(2 * cardinality, "array container")
-                vals = struct.unpack_from(f"<{cardinality}H", data, pos)
-                pos += 2 * cardinality
-                n_distinct = len(set(vals))
-                if values is not None:
-                    values.update(base + v for v in set(vals))
+                ends = runs[:, 0] + runs[:, 1]  # inclusive
+                if (ends > 0xFFFF).any():
+                    start, length = runs[np.argmax(ends > 0xFFFF)].tolist()
+                    raise ValueError(
+                        f"roaring run ({start}, len {length}) crosses "
+                        "the container's 16-bit boundary"
+                    )
+                # +1 at each run start, -1 past each end: the prefix sum
+                # is > 0 exactly on covered values (overlaps merge)
+                edges = np.zeros(0x10001, dtype=np.int32)
+                np.add.at(edges, runs[:, 0], 1)
+                np.add.at(edges, ends + 1, -1)
+                lows = np.flatnonzero(np.cumsum(edges[:-1]) > 0)
             else:
-                need(8192, "bitset container")
-                n_distinct = 0
-                for word_i in range(1024):
-                    (word,) = struct.unpack_from("<Q", data, pos + 8 * word_i)
-                    n_distinct += word.bit_count()
-                    if values is not None:
-                        while word:
-                            low = word & -word
-                            values.add(base + 64 * word_i + low.bit_length() - 1)
-                            word ^= low
-                pos += 8192
-            total += n_distinct
-            bound("container content")
-            yield n_distinct, values
+                is_array = cardinality <= 4096
+                size = 2 * cardinality if is_array else 8192
+                need(size, "array container" if is_array else "bitset container")
+                lows = container_lows(cardinality, data[pos : pos + size])
+                if is_array:  # stored values may repeat or be unsorted
+                    lows = np.unique(lows)
+                pos += size
+            total += len(lows)
+            if max_values is not None and total > max_values:
+                raise ValueError(
+                    f"roaring bitmap exceeds the {max_values}-value "
+                    "materialization bound (container content)"
+                )
+            yield (bm << 16) | key, lows.astype(np.uint16)
     if pos != len(data):
         raise ValueError(
             f"{len(data) - pos} trailing bytes after the last bitmap"
         )
+
+
+def _values(key: int, lows: np.ndarray) -> list[int]:
+    """A container's 64-bit values as Python ints."""
+    return (np.uint64(key << 16) + lows.astype(np.uint64)).tolist()
 
 
 def parse_roaring_bitmap_array(
@@ -236,52 +224,67 @@ def parse_roaring_bitmap_array(
     ``max_values`` bounds materialization during the parse (ValueError
     on breach, before memory is spent)."""
     out: set[int] = set()
-    for _, values in _iter_containers(data, max_values, collect=True):
-        out.update(values)  # type: ignore[arg-type]
+    for key, lows in iter_roaring_containers(data, max_values):
+        out.update(_values(key, lows))
     return out
 
 
 def count_roaring_bitmap_array(data: bytes) -> int:
-    """Exact distinct-value count of a Delta RoaringBitmapArray WITHOUT
-    materializing the values — same structural validation and the same
-    result as ``len(parse_roaring_bitmap_array(data))`` (shared walker),
-    in O(one container) memory: array containers dedup at most 4096
-    values, bitsets count by popcount, runs merge as intervals. This is
-    the driver-side cardinality-verification path for deletion vectors
-    of arbitrary size."""
-    return sum(n for n, _ in _iter_containers(data, None, collect=False))
+    """Exact distinct-value count of a Delta RoaringBitmapArray — same
+    structural validation and the same result as
+    ``len(parse_roaring_bitmap_array(data))`` (shared walker), in
+    O(one container) memory."""
+    return sum(len(lows) for _, lows in iter_roaring_containers(data))
 
 
 def iter_roaring_bitmap_array(
     data: bytes, max_values: int | None = None
 ) -> Iterator[set[int]]:
     """Stream the values of a Delta RoaringBitmapArray as per-container
-    sets (each ≤ 65,536 values) in O(one container) memory — the
-    executor-side expansion path in delta_lite, which re-batches these
-    into bounded Arrow chunks so a single multi-hundred-million-row DV
-    never materializes whole in any one process. Same validation, same
-    values as :func:`parse_roaring_bitmap_array` by construction."""
-    for _, values in _iter_containers(data, max_values, collect=True):
-        yield values  # type: ignore[misc]
+    sets (each ≤ 65,536 values) in O(one container) memory. Same
+    validation, same values as :func:`parse_roaring_bitmap_array` by
+    construction."""
+    for key, lows in iter_roaring_containers(data, max_values):
+        yield set(_values(key, lows))
 
 
-def serialize_roaring_bitmap_array(values) -> bytes:
-    """Set/iterable of 64-bit row indexes -> Delta RoaringBitmapArray
-    bytes, the WRITE direction of :func:`parse_roaring_bitmap_array`
-    (delete_rows in delta_lite). Emits the
+def container_payload(lows: np.ndarray) -> bytes:
+    """Sorted distinct uint16 lows -> the container's serialized data:
+    an ARRAY container (little-endian u16 values) up to 4096 values, a
+    BITSET container (1024 little-endian u64 words, bit ``v`` of the
+    container at word ``v >> 6``, bit ``v & 63``) beyond — the
+    RoaringFormatSpec's cardinality rule, so equal value sets always
+    serialize identically."""
+    if len(lows) <= 4096:
+        return np.asarray(lows, dtype="<u2").tobytes()
+    bits = np.zeros(0x10000, dtype=np.uint8)
+    bits[lows] = 1
+    return np.packbits(bits, bitorder="little").tobytes()
+
+
+def container_lows(card: int, payload: bytes) -> np.ndarray:
+    """Inverse of :func:`container_payload`: the uint16 lows of a
+    container of ``card`` values (an array container's as stored)."""
+    if card <= 4096:
+        return np.frombuffer(payload, dtype="<u2").astype(np.uint16)
+    return np.flatnonzero(
+        np.unpackbits(np.frombuffer(payload, dtype=np.uint8), bitorder="little")
+    ).astype(np.uint16)
+
+
+def frame_roaring_bitmap_array(
+    containers: list[tuple[int, int, bytes]],
+) -> bytes:
+    """``(key, cardinality, payload)`` containers, keys strictly
+    increasing, payloads as :func:`container_payload` builds them ->
+    Delta RoaringBitmapArray bytes. Emits the
     SERIAL_COOKIE_NO_RUNCONTAINER layout — always-valid per the
     RoaringFormatSpec (run containers are an optional optimization) and
-    exactly what the spec-anchored walker above validates: array
-    containers up to 4096 values, bitset containers beyond, offset
-    headers always present under the no-run cookie. Bitmap i holds the
-    low 32 bits of values whose high 32 bits equal i; empty
-    intermediate bitmaps are emitted so the index-is-high-part
-    invariant holds. Round-trip identity with the parser is pinned by
-    test for every container kind and boundary."""
-    vals = sorted(set(int(v) for v in values))
-    if vals and (vals[0] < 0 or vals[-1] >= (1 << 64)):
-        raise ValueError("row indexes must be unsigned 64-bit")
-    n_bitmaps = (vals[-1] >> 32) + 1 if vals else 0
+    exactly what the walker above validates: offset headers always
+    present under the no-run cookie. Bitmap i holds the containers whose
+    key's high 32 bits equal i; empty intermediate bitmaps are emitted
+    so the index-is-high-part invariant holds."""
+    n_bitmaps = (containers[-1][0] >> 16) + 1 if containers else 0
     # the array indexes bitmaps by high word, emitting EMPTY bitmaps for
     # gaps — so one huge value drives the loop (2^63 -> 2^31 iterations,
     # ~17 GiB of empties). Row indexes are per-FILE positions; 2^44
@@ -289,42 +292,46 @@ def serialize_roaring_bitmap_array(values) -> bytes:
     # file, so refuse rather than hang.
     if n_bitmaps > 4096:
         raise ValueError(
-            f"max row index {vals[-1]} needs {n_bitmaps} bitmaps "
+            f"container key {containers[-1][0]} needs {n_bitmaps} bitmaps "
             "(> 4096); refusing to serialize a pathological sparse range"
         )
+    by_bitmap: dict[int, list[tuple[int, int, bytes]]] = {}
+    for key, card, payload in containers:
+        by_bitmap.setdefault(key >> 16, []).append((key & 0xFFFF, card, payload))
     out = bytearray(struct.pack("<iq", ROARING_ARRAY_MAGIC, n_bitmaps))
-    from itertools import groupby
-
-    by_high: dict[int, list[int]] = {
-        h: [v & 0xFFFFFFFF for v in grp]
-        for h, grp in groupby(vals, key=lambda v: v >> 32)
-    }
     for bm in range(n_bitmaps):
-        v32 = by_high.get(bm, [])
-        containers: list[tuple[int, list[int]]] = [
-            (k, [v & 0xFFFF for v in grp])
-            for k, grp in groupby(v32, key=lambda v: v >> 16)
-        ]
-        out += struct.pack("<II", _COOKIE_NO_RUN, len(containers))
-        for key, lows in containers:  # descriptive headers
-            out += struct.pack("<HH", key, len(lows) - 1)
+        cs = by_bitmap.get(bm, [])
+        out += struct.pack("<II", _COOKIE_NO_RUN, len(cs))
+        for key, card, _ in cs:  # descriptive headers
+            out += struct.pack("<HH", key, card - 1)
         # offsets: byte position of each container's data from the
         # START of this bitmap's serialization (cookie byte 0)
-        header_end = 8 + 4 * len(containers) + 4 * len(containers)
-        running = header_end
-        sizes = [
-            2 * len(lows) if len(lows) <= 4096 else 8192
-            for _, lows in containers
-        ]
-        for size in sizes:
+        running = 8 + 8 * len(cs)
+        for _, _, payload in cs:
             out += struct.pack("<I", running)
-            running += size
-        for (_key, lows), size in zip(containers, sizes):
-            if len(lows) <= 4096:
-                out += struct.pack(f"<{len(lows)}H", *lows)
-            else:
-                words = [0] * 1024
-                for v in lows:
-                    words[v >> 6] |= 1 << (v & 63)
-                out += struct.pack("<1024Q", *words)
+            running += len(payload)
+        for _, _, payload in cs:
+            out += payload
     return bytes(out)
+
+
+def serialize_roaring_bitmap_array(values) -> bytes:
+    """Set/iterable of 64-bit row indexes -> Delta RoaringBitmapArray
+    bytes, the WRITE direction of :func:`parse_roaring_bitmap_array`:
+    values grouped into containers (:func:`container_payload`) and
+    framed (:func:`frame_roaring_bitmap_array`). Round-trip identity with
+    the parser is pinned by test for every container kind and boundary."""
+    vals = sorted(set(int(v) for v in values))
+    if vals and (vals[0] < 0 or vals[-1] >= (1 << 64)):
+        raise ValueError("row indexes must be unsigned 64-bit")
+    arr = np.array(vals, dtype=np.uint64)
+    keys, starts = np.unique(arr >> np.uint64(16), return_index=True)
+    return frame_roaring_bitmap_array(
+        [
+            (key, len(lows), container_payload(lows))
+            for key, lows in zip(
+                keys.tolist(),
+                np.split((arr & np.uint64(0xFFFF)).astype(np.uint16), starts[1:]),
+            )
+        ]
+    )

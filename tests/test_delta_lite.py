@@ -2164,3 +2164,119 @@ def test_mapping_upgrade_on_already_v3_table_declares_feature(spark, tmp_path):
     # and the mapped table still deletes
     dl.delete_rows(spark, path, "id = 3")
     assert read_delta_lite(spark, path).count() == 0
+
+
+# ---- one-selectExpr wide projections (_cast_select) ----------------------
+
+ODD = ["a.b", "c d", "e`f"]
+
+
+def _odd_frame(spark):
+    from pyspark.sql import types as T
+
+    inner = T.StructType(
+        [T.StructField(n, T.LongType()) for n in ODD]
+        + [T.StructField("g h", T.ArrayType(T.StructType(
+            [T.StructField("i.j", T.StringType())])))]
+    )
+    schema = T.StructType(
+        [T.StructField(n, T.LongType()) for n in ODD]
+        + [T.StructField("s.t", inner), T.StructField("p k", T.StringType())]
+    )
+    rows = [
+        (i, i * 2, i * 3, (i, -i, i * 10, [(f"v{i}",)]),
+         ["it's", "a\\b", "x"][i % 3])
+        for i in range(12)
+    ]
+    return spark.createDataFrame(rows, schema)
+
+
+def test_cast_select_round_trips_odd_names_and_nested_types(spark):
+    from pyspark.sql import types as T
+
+    from lcr_etl_upgrade_spark.delta_lite import _cast_select, _sql_name
+
+    df = _odd_frame(spark)
+    # NOT NULL nested struct field: spelled by DataType.sql; non-null
+    # array elements: not spelled, so that column keeps a Column cast
+    nn = T.StructType([
+        T.StructField("k`1", T.IntegerType(), False),
+        T.StructField("l m", T.ArrayType(T.IntegerType(), False), False),
+    ])
+    df = df.withColumn(
+        "n n",
+        F.struct(F.lit(1).alias("k`1"), F.array(F.lit(2)).alias("l m")),
+    )
+    cols = [(_sql_name(f.name), f.dataType, f"x {f.name}") for f in df.schema]
+    out = _cast_select(df, cols, "`a.b` + 1 AS `y.z`")
+    assert out.schema.fieldNames() == [f"x {n}" for n in df.columns] + ["y.z"]
+    # nested names and types round-trip, nested nullability too
+    assert [f.dataType for f in out.schema.fields[:-1]] == [
+        f.dataType for f in df.schema
+    ]
+    assert out.schema["x n n"].dataType == nn
+    assert [tuple(r)[:-1] for r in out.orderBy("`x a.b`").collect()] == [
+        tuple(r) for r in df.orderBy("`a.b`").collect()
+    ]
+
+
+def test_odd_names_column_mapped_dml_round_trip(spark, tmp_path):
+    """A column-mapped, partitioned table whose names hold dots, spaces
+    and backticks, with a nested struct and partition values holding a
+    quote and a backslash: every projection in delete, update (rewrite
+    and DV paths), merge, the reader and the change feed goes through
+    the one-selectExpr helper and must keep names, values and types."""
+    from lcr_etl_upgrade_spark.delta_lite import (
+        delete_rows,
+        merge_rows,
+        read_delta_changes,
+        set_table_properties,
+        update_rows,
+    )
+
+    path = str(tmp_path / "odd")
+    df = _odd_frame(spark)
+    write_delta_lite(df, path, partition_by=("p k",), column_mapping="name")
+    set_table_properties(
+        spark,
+        path,
+        {
+            "delta.enableChangeDataFeed": "true",
+            "delta.enableDeletionVectors": "true",
+        },
+    )
+    start = replay_log(spark, path).version + 1
+    expect = {r["a.b"]: r.asDict(recursive=True) for r in df.collect()}
+
+    delete_rows(spark, path, "`a.b` = 0")
+    del expect[0]
+    update_rows(spark, path, "`c d` = 4", {"e`f": F.lit(-1)}, use_dvs=True)
+    expect[2]["e`f"] = -1
+    update_rows(spark, path, "`a.b` = 5", {"e`f": F.lit(-5)}, use_dvs=False)
+    expect[5]["e`f"] = -5
+    src = df.filter("`a.b` >= 9").withColumn("c d", F.lit(0))
+    merge_rows(
+        spark, path, src, "t.`a.b` = s.`a.b`",
+        matched=(("update", None, {"c d": "s.`c d`"}),),
+    )
+    for k in (9, 10, 11):
+        expect[k]["c d"] = 0
+
+    got = read_delta_lite(spark, path)
+    assert got.schema == df.schema
+    assert {r["a.b"]: r.asDict(recursive=True) for r in got.collect()} == expect
+    feed = read_delta_changes(spark, path, start)
+    kinds = sorted(
+        (r["_change_type"], r["a.b"]) for r in feed.collect()
+    )
+    assert ("delete", 0) in kinds
+    assert ("update_postimage", 2) in kinds and ("update_preimage", 5) in kinds
+    assert [k for k in kinds if k[0] == "update_postimage"] == [
+        ("update_postimage", k) for k in (2, 5, 9, 10, 11)
+    ]
+    post = {
+        r["a.b"]: r.asDict(recursive=True)
+        for r in feed.filter("_change_type = 'update_postimage'").collect()
+    }
+    for k, row in post.items():
+        assert {c: row[c] for c in df.columns} == expect[k]

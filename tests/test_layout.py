@@ -172,6 +172,28 @@ def test_zorder_key_rejects_oversized_keys():
         zorder_key([F.lit(0)] * 8, 8)  # 64 bits > 63
 
 
+def test_zorder_63_bit_key_assigns_files_exactly(spark):
+    """3 cols x 21 bits = a 63-bit key: the file-number arithmetic runs in
+    decimals, whose 2^63 divisor overflowed the long literal. With x = y
+    = z the key's top two bits are bit 20 of the shared bucket, so the
+    lower half of the range is file 0 and the upper half file 3 —
+    including the last rows, whose keys sit just below 2^63."""
+    n = 1000
+    df = spark.range(n).select(
+        "id", *(F.col("id").cast("double").alias(c) for c in "xyz")
+    )
+    out = optimize_layout(
+        df, ["x", "y", "z"], 4, bits=21,
+        bounds={c: (0.0, float(n)) for c in "xyz"},
+    )
+    rows = out.select("id", F.spark_partition_id().alias("p")).collect()
+    assert sorted(r.id for r in rows) == list(range(n))
+    halves = {(r.id >= n // 2, r.p) for r in rows}
+    assert len(halves) == 2, halves
+    (lo,), (hi,) = ({p for h, p in halves if h is b} for b in (False, True))
+    assert lo < hi
+
+
 def test_parquet_zorder_sink_clusters_files(spark, tmp_path):
     """The K6 sink: registry-built writer z-orders before writing.
     Clustering evidence: per-file footer ranges on BOTH columns are

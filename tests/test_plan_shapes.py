@@ -233,3 +233,89 @@ def test_runtime_bloom_filter_injects_on_selective_shuffle_join(spark):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+# ---- deletion-vector paths run without Python workers -------------------
+# Unlike the plan-only checks above, these run the commands and read the
+# physical plans Spark recorded for every execution they started.
+
+PYTHON_WORKER_NODES = ("MapInPandas", "FlatMapCoGroupsInPandas", "ArrowEvalPython")
+
+
+def _executed_plans(spark, action) -> list[str]:
+    """Run ``action`` and return the physical plan of every SQL execution
+    it started, read from the SQL status store (kept with the UI off)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def executions() -> dict[int, str]:
+        bus.waitUntilEmpty()
+        seq = store.executionsList()
+        return {
+            int(e.executionId()): e.physicalPlanDescription()
+            for e in (seq.apply(i) for i in range(seq.size()))
+        }
+
+    seen = executions()
+    action()
+    return [p for i, p in executions().items() if i not in seen]
+
+
+def test_dv_paths_start_no_python_worker(spark, tmp_path):
+    """delete_rows, the DV write paths of update_rows/merge_rows and the
+    DV readers (read_delta_lite, read_delta_changes) build, union and
+    expand deletion vectors with Spark built-ins: none of their executed
+    plans may hold a Python-worker node."""
+    from pyspark.sql import functions as F
+
+    from lcr_etl_upgrade_spark.delta_lite import (
+        delete_rows,
+        merge_rows,
+        read_delta_changes,
+        read_delta_lite,
+        replay_log,
+        set_table_properties,
+        update_rows,
+        write_delta_lite,
+    )
+
+    path = str(tmp_path / "dv")
+    write_delta_lite(
+        spark.range(400).selectExpr("id", "id % 10 AS v").repartition(2),
+        path,
+    )
+    set_table_properties(
+        spark,
+        path,
+        {
+            "delta.enableDeletionVectors": "true",
+            "delta.enableChangeDataFeed": "true",
+        },
+    )
+    start = replay_log(spark, path).version + 1
+    src = spark.range(0, 400, 50).selectExpr("id", "-1 AS v")
+    steps = {
+        "delete": lambda: delete_rows(spark, path, "id % 7 = 0"),
+        "delete_again": lambda: delete_rows(spark, path, "id % 11 = 0"),
+        "update": lambda: update_rows(
+            spark, path, "id % 13 = 1", {"v": F.lit(99)}, use_dvs=True
+        ),
+        "merge": lambda: merge_rows(
+            spark, path, src, "t.id = s.id",
+            matched=(("update", None, {"v": "s.v"}),),
+            use_dvs=True,
+        ),
+        "read": lambda: read_delta_lite(spark, path).collect(),
+        "changes": lambda: read_delta_changes(spark, path, start).collect(),
+    }
+    for name, step in steps.items():
+        plans = _executed_plans(spark, step)
+        assert plans, name
+        for plan in plans:
+            for node in PYTHON_WORKER_NODES:
+                assert node not in plan, f"{name}: {node}\n{plan}"
+    assert replay_log(spark, path).dvs
+    rows = {r.id: r.v for r in read_delta_lite(spark, path).collect()}
+    assert not any(i % 7 == 0 or i % 11 == 0 for i in rows)
+    assert all(rows[i] == 99 for i in rows if i % 13 == 1 and i % 50)
+    assert all(rows[i] == -1 for i in rows if i % 50 == 0)
